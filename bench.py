@@ -17,8 +17,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from gpd_lite_toolbox_spark.session import (  # noqa: E402
+    host_cpus,
+    host_driver_memory,
+)
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(host_cpus()))
 
 # headline set: every implemented operator family, weighted toward the
 # shapes that matter at scale (binned agg, spatial self-join, NN join)
@@ -320,7 +325,10 @@ def main() -> None:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", host_driver_memory()),
+        )
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -38,10 +38,15 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from gpd_lite_toolbox_spark.session import (  # noqa: E402
+    host_cpus,
+    host_driver_memory,
+)
+
 REPO = os.path.dirname(os.path.abspath(__file__))
 SF01 = "/root/testdata/sf0.1"
 SF1 = os.path.join(REPO, "benchdata", "sf1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(host_cpus()))
 COPIES = 10
 DOC_STRIDE = 5_000_000  # multiple of 10: %10 planted dups copy-invariant
 VEC_STRIDE = 1_000_000
@@ -457,7 +462,8 @@ def main() -> None:
         .config("spark.ui.enabled", "false")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", host_driver_memory()),
         )
         .getOrCreate()
     )

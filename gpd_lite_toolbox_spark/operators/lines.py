@@ -253,8 +253,8 @@ def match_line_cluster(
     collects), never corpus-scale.  Because the reference semantics
     force k = |A| (core.py:74 passes ``n_clusters=len(gdf1)``), an
     unwary caller handing a corpus-scale left side would collect the
-    whole descriptor table onto the driver and broadcast k centers
-    into an O(n*k) distance expression — so the ``cosine_topk
+    whole descriptor table onto the driver and ship k centers into
+    an O(n*k) distance kernel — so the ``cosine_topk
     max_pairs`` discipline applies: calls where |A| exceeds ``max_k``
     raise unless ``force=True``, steering large-scale callers to
     block/subset the left side first (the entry points bound |A| by
@@ -262,8 +262,8 @@ def match_line_cluster(
     hit by accident).  The guard's count job re-executes verts_a's
     upstream lineage once — cache it first if that lineage is
     expensive.  Everything else is the ``kmeans_assign`` shape: per
-    round ONE partial-combined aggregate plus a 1-row broadcast;
-    assignments never shuffle.
+    round ONE map-only job collecting at most k cell sums per
+    partition; assignments never shuffle.
     """
     from ..vector.kmeans import kmeans_assign
 
@@ -319,10 +319,9 @@ def match_line_cluster(
     )
     # the labeled frame feeds BOTH sides of the cell self-join below:
     # persist it so the A-side and B-side branches read one cached
-    # assignment instead of each re-running the full Lloyd cascade
-    # (guide §5 — the cascade is n_iter+1 assignment passes; unpersisted
-    # this doubled every one of them, half of match_line_cluster's
-    # round-9 7.4 s at sf0.1)
+    # assignment instead of each running the final assignment kernel
+    # (the Lloyd rounds themselves ran inside kmeans_assign, which
+    # returns one assignment pass over its cached input; guide §5)
     labeled = tracked_persist(
         kmeans_assign(
             pooled,

@@ -14,8 +14,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_cpus() -> int:
+    """CPUs this process may run on (its affinity mask, which a
+    container's cpuset narrows) — the default ``local[N]`` width."""
+    return len(os.sched_getaffinity(0))
+
+
+def host_driver_memory() -> str:
+    """Default driver heap for the bench harnesses: half of MemTotal,
+    between 1g and 16g."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal"))
+    return f"{max(1, min(16, kb // (2 * 1024 * 1024)))}g"
+
+
 def get_spark(app_name: str = "gpd_lite_toolbox_spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(host_cpus()))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

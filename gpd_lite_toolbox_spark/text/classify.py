@@ -339,9 +339,8 @@ def lr_train_gd(
     trainable sibling of ``train_nb`` (the published practice: a small
     linear quality/domain classifier gates what enters a corpus).
 
-    Same contract as ``vector.kmeans.kmeans_assign``: no driver
-    collect, no convergence loop — ``n_iter`` one-row aggregates
-    chained lazily, every cross-engine quantity on the
+    No driver collect, no convergence loop — ``n_iter`` one-row
+    aggregates chained lazily, every cross-engine quantity on the
     ``round_digits`` lattice (standardized features, each round's
     sigmoid p, gradients, weights), so the DuckDB oracle replays the
     rounds bit-for-bit and the result is hash-gateable. ``pyspark.ml``

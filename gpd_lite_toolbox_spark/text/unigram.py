@@ -73,16 +73,18 @@ UNIGRAM_PIECES: list[tuple[str, int]] = [
 UNK_CHAR_COST = 60
 MAX_PIECE_LEN = 4
 
-# Loud ceiling on the one-row piece-inventory packs in
+# Loud ceiling on the one-row piece-inventory pack in
 # ``unigram_train_em`` (r10 VERDICT "What's wrong" #5): the SEED
 # inventory is |distinct substrings <= MAX_PIECE_LEN| of the corpus
 # vocabulary — bounded, but only by the vocabulary, so a caller
 # feeding an unbounded vocabulary would silently build a
 # multi-gigabyte single row.  At ~50 bytes per (piece, cnt, cost)
-# struct this cap keeps the row under ~100 MB and fails loudly
-# (in-plan assert_true) instead.  The post-EM inventory is
-# max_pieces-bounded by construction and rides the same guard for
-# free (it is always smaller than the seed).
+# struct this cap keeps the row under ~100 MB: the trainer counts at
+# most cap + 1 inventory rows BEFORE the pack and refuses an oversized
+# inventory, so no buffer past the cap is ever built.  The post-EM
+# packs are not guarded: they are bounded by construction (at most
+# max_pieces multi-char pieces plus the single characters, which the
+# seed already holds).
 SEED_INV_ROW_CAP = 2_000_000
 
 
@@ -630,11 +632,13 @@ def unigram_train_em(
       the carry rule forecloses.
 
     ``n_rounds`` is fixed and unrolled into ONE declarative plan (the
-    ``bpe_train`` / ``lr_train_gd`` / ``kmeans_assign`` discipline):
-    each round's inventory rides into the next DP as a BROADCAST
-    one-row ``map<string, bigint>`` built with ``map_from_entries`` —
-    no driver collect anywhere, and plan size is constant in inventory
-    size (the DP reads the map column instead of inlining literals).
+    ``bpe_train`` / ``lr_train_gd`` discipline): each round's
+    inventory rides into the next DP as a BROADCAST one-row
+    ``map<string, bigint>`` built with ``map_from_entries`` — no
+    driver collect of the inventory (one bounded count refuses an
+    oversized seed before its pack), and plan size is constant in
+    inventory size (the DP reads the map column instead of inlining
+    literals).
     The big seed is bounded by |distinct substrings <= max_len| of the
     corpus vocabulary — alphabet^max_len at worst, far below corpus
     scale, and it exists only inside round 1's broadcast map.
@@ -731,32 +735,23 @@ def unigram_train_em(
     # struct(-cnt, piece) IS the (cnt desc, piece) rank order, the
     # carry membership test replays the anti-join, and the reprice is
     # the same IEEE round(scale*ln(total/cnt)+1e-9) expression.
-    # in-plan bound assertion (r10 VERDICT #5): the pack below is the
-    # only place the inventory becomes a single row, so the loud
-    # guard lives here — assert_true returns NULL when the bound
-    # holds (the when() then passes _inv through unchanged) and
-    # aborts the job with the sized message when it does not.
-    _capped_inv = F.when(
-        F.assert_true(
-            F.size(F.col("_inv")) <= F.lit(int(SEED_INV_ROW_CAP)),
-            F.concat(
-                F.lit("unigram_train_em: one-row piece inventory ("),
-                F.size(F.col("_inv")).cast("string"),
-                F.lit(
-                    f" pieces) exceeds SEED_INV_ROW_CAP="
-                    f"{int(SEED_INV_ROW_CAP)}; the corpus vocabulary "
-                    "is too large for the one-row EM carry"
-                ),
-            ),
-        ).isNull(),
-        F.col("_inv"),
-    ).alias("_inv")
+    # bound the one-row pack BEFORE collect_list builds it (r10
+    # VERDICT #5): counting at most cap + 1 rows of the persisted
+    # inventory is cheap, and an oversized inventory never reaches an
+    # aggregation buffer
+    cap = int(SEED_INV_ROW_CAP)
+    if inv.limit(cap + 1).count() > cap:
+        raise ValueError(
+            f"unigram_train_em: seed piece inventory exceeds "
+            f"SEED_INV_ROW_CAP={cap}; the corpus vocabulary is too large "
+            "for the one-row EM carry"
+        )
     inv_row = tracked_persist(
         inv.agg(
             F.collect_list(F.struct("piece", "cnt", "cost")).alias(
                 "_inv"
             )
-        ).select(_capped_inv)
+        )
     )
     mk, mc = int(max_pieces), int(min_count)
     mstep = F.expr(
@@ -798,6 +793,8 @@ def unigram_train_em(
         urow = usage.agg(
             F.collect_list(F.struct("piece", "cnt")).alias("_u")
         )
+        # no cap check here: this pack is bounded by construction (at
+        # most max_pieces multi-char pieces plus the seed's singles)
         inv_row = tracked_persist(
             urow.crossJoin(F.broadcast(inv_row)).select(
                 mstep.alias("_inv")

@@ -1,23 +1,27 @@
 """Relational k-means over embedding columns — Lloyd's algorithm with
-a FIXED iteration count unrolled into one declarative plan.
+a FIXED iteration count, run the way MLlib runs it: one Spark job per
+round, the bounded k x dims center matrix kept on the driver between
+rounds.
 
-``pyspark.ml``'s KMeans is iterative driver-side (fit() runs jobs until
-convergence) and its k-means|| init is partition-sensitive, so its
-output can never be hash-gated.  For the data-curation uses this
-package needs — cluster-balanced sampling, SemDeDup-style semantic
-grouping, per-cluster quota curation — a SMALL fixed number of Lloyd
-rounds from deterministic seed centroids is the right contract, and it
-is fully expressible as a DataFrame plan:
+``pyspark.ml``'s KMeans iterates until convergence and its k-means||
+init is partition-sensitive, so its output can never be hash-gated.
+For the data-curation uses this package needs — cluster-balanced
+sampling, SemDeDup-style semantic grouping, per-cluster quota
+curation — a SMALL fixed number of Lloyd rounds from deterministic
+seed centroids is the right contract:
 
-- assignment is MAP-ONLY: the current centers ride along as a one-row
-  array (broadcast), and each vector computes its argmin-L2² cell in
-  an Arrow-batched kernel — no shuffle, no window;
-- the mean update is ONE partial-combined aggregate per round
-  (``dims`` avg columns grouped by cell — at most |cells| x dims
-  values per input partition reach the exchange);
-- rounds chain lazily (aggregate -> one-row array -> next projection),
-  so ``n_iter`` rounds = ``n_iter`` aggregates in ONE job, no driver
-  collect anywhere, and the bench times the real work.
+- assignment is MAP-ONLY: the current centers live as a ``(k, dims)``
+  float64 ndarray in the closure of an Arrow-batched argmin-L2²
+  kernel — no shuffle, no join, no per-row center payload;
+- a round is ONE map-only job: each partition assigns its rows and
+  sums them per cell in row order, the <= k per-partition (sum,
+  count) rows are collected, and the driver merges them in partition
+  order, divides and rounds — the same IEEE operations as Spark's
+  partial/final ``round(avg(x), d)``, with no exchange (a Spark
+  ``groupBy`` here would add an exchange, and under AQE two more
+  jobs, per round); an empty cell keeps its previous center;
+- ``n_iter`` rounds = ``n_iter`` Spark jobs at construction time, and
+  the returned frame is the single final assignment pass.
 
 Cross-engine exactness: seed centroids are md5-derived literals
 (``vector.pq.default_coarse_centroids``), updated means are ROUNDED
@@ -43,6 +47,8 @@ rows x k x dims of actual math instead of interpreter dispatch.
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Context, Decimal
+
 import numpy as np
 import pandas as pd
 
@@ -51,74 +57,59 @@ from pyspark.sql import functions as F
 
 from ..cache import tracked_persist
 
+# wide enough to quantize any finite double at any sane digit count
+_DEC = Context(prec=1000)
 
-def _argmin_cell_arrow(dims: int):
-    """Arrow-vectorized argmin-L2² cell assignment (guide §4.2, the
-    ``_dot_arrow`` recipe): squared differences accumulate over the
-    ``dims`` axis SEQUENTIALLY from 0.0 — the exact operation order of
-    the former ``aggregate(zip_with(...), 0.0, acc + x)`` fold and of
-    the DuckDB oracle's replay — while vectorizing over rows x
-    centers, and ``np.argmin`` resolves ties to the FIRST minimal
-    cell, exactly like ``array_position(_d2l, array_min(_d2l))``.
-    Results are bit-identical to the fold; only the interpreter
-    dispatch is gone.
 
-    A NULL vector (or one whose length differs from the centers'
-    ``dims``) assigns a NULL cell — the fold produced the same: any
-    NULL/missing zip term nulled that center's distance, nulling
-    array_min across the board.
+def _nearest(vals: np.ndarray, C: np.ndarray):
+    """Argmin-L2² cells of an object array of vectors against the
+    ``(k, dims)`` centers ``C`` (guide §4.2, the ``_dot_arrow``
+    recipe): squared differences accumulate over the ``dims`` axis
+    SEQUENTIALLY from 0.0 — the exact operation order of the former
+    ``aggregate(zip_with(...), 0.0, acc + x)`` fold and of the DuckDB
+    oracle's replay — while vectorizing over rows x centers, and
+    ``np.argmin`` resolves ties to the FIRST minimal cell, exactly
+    like ``array_position(_d2l, array_min(_d2l))``.  Results are
+    bit-identical to the fold; only the interpreter dispatch is gone.
+
+    Returns ``(ok, X, cells)``: the mask of rows that get a cell, their
+    float64 matrix, and their cells.  A NULL vector (or one whose
+    length differs from ``dims``) gets no cell — the fold produced the
+    same: any NULL/missing zip term nulled that center's distance,
+    nulling array_min across the board.
 
     KNOWN DIVERGENCE (r10 ADVICE, documented on purpose): a vector
-    containing a true ``NaN`` *value* also gets a NULL cell here (the
-    NaN mask below cannot tell a float NaN from an Arrow-converted
-    NULL element), whereas the retired fold assigned it cell 0 (Spark
-    SQL orders NaN = NaN, so ``array_position`` found the all-NaN
-    minimum at position 1).  NULL is the saner answer — a NaN
-    distance is not a distance — and no declared query feeds NaN
-    vectors (the oracle sweep is hash-green), so the kernel keeps it;
-    the bit-identity claim above is for NULL/wrong-length/finite
-    inputs."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("int")
-    def cell(vv: pd.Series, ctr: pd.Series) -> pd.Series:
-        if len(vv) == 0:
-            return pd.Series(np.zeros(0, dtype=np.int32))
-        # every row carries the same broadcast-joined flat array; one
-        # reshape per batch recovers the (k, dims) center matrix
-        C = np.asarray(ctr.iloc[0], dtype=np.float64).reshape(-1, dims)
-        vals = vv.to_numpy()
-        ok = np.array(
-            [v is not None and len(v) == dims for v in vals], dtype=bool
-        )
-        out = np.full(len(vals), None, dtype=object)
-        if ok.any():
-            X = np.vstack(vals[ok]).astype(np.float64)
-            # NULL vector ELEMENTS arrive as NaN through Arrow; the
-            # fold nulled every center's distance for such rows, so
-            # they keep a NULL cell here too
-            ok[ok] = ~np.isnan(X).any(axis=1)
-            X = X[~np.isnan(X).any(axis=1)]
-        if ok.any():
-            acc = np.zeros((X.shape[0], C.shape[0]), dtype=np.float64)
-            for d in range(dims):
-                t = X[:, d, None] - C[None, :, d]
-                acc += t * t
-            out[ok] = np.argmin(acc, axis=1).astype(np.int32)
-        return pd.Series(out)
-
-    # deterministic in value; the flag stops Catalyst duplicating the
-    # kernel below pushed filters (the _dot_arrow recipe)
-    return cell.asNondeterministic()
+    containing a true ``NaN`` *value* also gets no cell here (the NaN
+    mask below cannot tell a float NaN from an Arrow-converted NULL
+    element), whereas the retired fold assigned it cell 0 (Spark SQL
+    orders NaN = NaN, so ``array_position`` found the all-NaN minimum
+    at position 1).  NULL is the saner answer — a NaN distance is not
+    a distance — and no declared query feeds NaN vectors (the oracle
+    sweep is hash-green), so the kernel keeps it; the bit-identity
+    claim above is for NULL/wrong-length/finite inputs."""
+    dims = C.shape[1]
+    ok = np.array(
+        [v is not None and len(v) == dims for v in vals], dtype=bool
+    )
+    X = np.zeros((0, dims))
+    if ok.any():
+        X = np.vstack(vals[ok]).astype(np.float64)
+        # NULL vector ELEMENTS arrive as NaN through Arrow
+        finite = ~np.isnan(X).any(axis=1)
+        ok[ok] = finite
+        X = X[finite]
+    acc = np.zeros((X.shape[0], C.shape[0]), dtype=np.float64)
+    for d in range(dims):
+        t = X[:, d, None] - C[None, :, d]
+        acc += t * t
+    return ok, X, np.argmin(acc, axis=1).astype(np.int32)
 
 
-def _assign(
-    vectors_d: DataFrame, ctr_one_row: DataFrame, dims: int
-) -> DataFrame:
-    """Row-local argmin assignment: the centers ride as a broadcast
-    one-row flat array (cell-ordered, k x dims doubles: the i-th
-    ``dims``-slice IS cell i) and each row's cell comes from the Arrow
-    kernel.  Adds ``cell`` to the input columns; no shuffle.
+def _assign(vectors_d: DataFrame, centers: np.ndarray) -> DataFrame:
+    """Row-local argmin assignment of ``_vv`` against the ``(k, dims)``
+    ``centers`` (row i IS cell i), held in the Arrow kernel's closure.
+    Adds ``cell`` (NULL where ``_nearest`` gives none) to the input
+    columns; no shuffle, no join.
 
     History: a Catalyst ``transform/zip_with/aggregate`` fold held
     this slot through round 9 (and a per-dimension UNROLLED indexing
@@ -128,15 +119,84 @@ def _assign(
     |rows| x k x dims interpreted lambda steps, the kernel runs
     dims x k SIMD column ops per batch (measured 8.5 -> 1.8 s on
     match_line_cluster, 2.6 -> 0.9 s on embedding_clusters, sf0.1).
-    The per-row cost of carrying the flat center array across the
-    Arrow boundary is k x dims x 8 bytes of memcpy — orders of
-    magnitude cheaper than the fold it replaces at every k/dims this
-    package uses."""
-    return (
-        vectors_d.crossJoin(F.broadcast(ctr_one_row))
-        .withColumn("cell", _argmin_cell_arrow(dims)("_vv", "_ctr"))
-        .drop("_ctr")
+    The centers ship once per task inside the pickled kernel, not per
+    row: only the vector column crosses Arrow."""
+    from pyspark.sql.functions import pandas_udf
+
+    C = np.asarray(centers, dtype=np.float64)
+
+    @pandas_udf("int")
+    def cell(vv: pd.Series) -> pd.Series:
+        ok, _, cells = _nearest(vv.to_numpy(), C)
+        out = np.full(len(ok), None, dtype=object)
+        out[ok] = cells
+        return pd.Series(out)
+
+    # deterministic in value; the flag stops Catalyst duplicating the
+    # kernel below pushed filters (the _dot_arrow recipe)
+    return vectors_d.withColumn("cell", cell.asNondeterministic()("_vv"))
+
+
+def _cell_sums(C: np.ndarray):
+    """``mapInPandas`` function of one Lloyd round: assign each row of
+    the partition to ``C`` and sum the rows per cell IN ROW ORDER from
+    0.0 (``np.add.at`` is unbuffered and sequential) — exactly the
+    partial ``avg`` buffer Spark's map-side aggregate keeps.  Yields
+    one ``(cell, s, n)`` row per non-empty cell of the partition, and
+    nothing for a partition without assignable rows."""
+    k, dims = C.shape
+
+    def part(batches):
+        S = np.zeros((k, dims))
+        N = np.zeros(k, dtype=np.int64)
+        for b in batches:
+            _, X, cells = _nearest(b["_vv"].to_numpy(), C)
+            np.add.at(S, cells, X)
+            np.add.at(N, cells, 1)
+        hit = np.flatnonzero(N)
+        if len(hit):
+            yield pd.DataFrame(
+                {"cell": hit.astype(np.int32), "s": list(S[hit]), "n": N[hit]}
+            )
+
+    return part
+
+
+def _spark_round(x: float, digits: int) -> float:
+    """Spark SQL ``round(x, digits)`` of a double: HALF_UP on its
+    shortest decimal form (``BigDecimal(x).setScale(digits, HALF_UP)``);
+    NaN and infinities pass through, and a zero comes back unsigned."""
+    if not np.isfinite(x):
+        return x
+    q = Decimal(repr(x)).quantize(
+        Decimal(1).scaleb(-digits), rounding=ROUND_HALF_UP, context=_DEC
     )
+    return float(q) + 0.0
+
+
+def _lloyd_rounds(
+    vd: DataFrame, C: np.ndarray, n_iter: int, digits: int
+) -> np.ndarray:
+    """Run ``n_iter`` Lloyd rounds of ``vd``'s ``_vv`` vectors from the
+    centers ``C``, one collected job each; returns the final centers.
+    Each round merges its per-partition partials in partition order
+    from 0.0, divides sum by count and rounds — Spark's final ``avg``
+    and ``round(_, digits)`` — and an empty cell keeps its center."""
+    for _ in range(n_iter):
+        parts = (
+            vd.select("_vv")
+            .mapInPandas(_cell_sums(C), "cell int, s array<double>, n bigint")
+            .collect()
+        )
+        S = np.zeros_like(C)
+        N = np.zeros(len(C), dtype=np.int64)
+        for r in parts:
+            S[r.cell] += r.s
+            N[r.cell] += r.n
+        C = C.copy()
+        for c in np.flatnonzero(N):
+            C[c] = [_spark_round(m, digits) for m in S[c] / N[c]]
+    return C
 
 
 def kmeans_assign(
@@ -158,44 +218,28 @@ def kmeans_assign(
     A cell that loses all members keeps its previous center (standard
     Lloyd handling, and what keeps cell ids stable for the oracle).
 
-    Scale shape: per round, ONE |cells|-keyed aggregate exchange
-    (partial-combined avgs), one single-row pack aggregate, and a
-    broadcast of the 1-row center array; assignments never shuffle.
-    ``n_iter`` is a plan-size knob, not a convergence loop — curation
-    pipelines want few-round determinism, not convergence
-    (``pyspark.ml.KMeans`` remains the quality path when a trained,
-    non-gateable clustering is acceptable).
-
-    Round-10 plan-shape change (guide §2.4): the per-round
-    empty-cell-carry used to be a k-row ``centers LEFT JOIN means``
-    — planned as a SortMergeJoin with two exchanges and two sorts PER
-    ROUND on k-row data.  The centers now live as a one-row flat
-    array end to end, and the carry is row-local array algebra
-    (element-wise ``coalesce(mean, previous)`` per cell slice) over
-    the round's means packed into a one-row map — identical values
-    (the coalesce is still per DIMENSION, matching the old
-    ``coalesce(_m{d}, cv[{d}])``), two fewer exchanges and one fewer
-    join per round, and the seed centers no longer need a k-row
-    createDataFrame + collect_list aggregate per assignment pass.
+    Scale shape: each round is ONE map-only Spark job whose result is
+    at most k (cell, sum, count) rows per input partition, so
+    construction launches exactly ``n_iter`` jobs and no exchange; the
+    returned plan is one map-only assignment pass with the final
+    centers in the kernel's closure.  ``n_iter`` is a fixed round
+    count, not a convergence loop — curation pipelines want few-round
+    determinism, not convergence (``pyspark.ml.KMeans`` remains the
+    quality path when a trained, non-gateable clustering is
+    acceptable).
     """
     if n_iter < 0:
         raise ValueError(f"n_iter must be >= 0, got {n_iter}")
-    dims = len(centroids[0])
-    k = len(centroids)
-    spark = vectors.sparkSession
-    ctr = spark.createDataFrame(
-        [([float(x) for c in centroids for x in c],)],
-        "_ctr array<double>",
-    )
+    C = np.array(centroids, dtype=np.float64)
     # the assignment input is consumed n_iter+1 times (once per Lloyd
-    # pass: each round's mean aggregate re-reads it, and the final
-    # assignment reads it again) — persist the PROJECTED (id, vector)
-    # table so the passes re-scan a cached projection instead of
-    # re-running the upstream lineage per pass (guide §5; MLlib's own
-    # KMeans caches its input for exactly this reason).  For
-    # match_line_cluster the upstream is the 4-join/2-window
-    # descriptor build: persisting it here measured 8.5 -> 1.8 s at
-    # sf0.1.  n_iter=0 keeps the single-pass plan unpersisted.
+    # round's job, and once more by the returned assignment) — persist
+    # the PROJECTED (id, vector) table so the passes re-scan a cached
+    # projection instead of re-running the upstream lineage per pass
+    # (guide §5; MLlib's own KMeans caches its input for exactly this
+    # reason).  For match_line_cluster the upstream is the
+    # 4-join/2-window descriptor build: persisting it here measured
+    # 8.5 -> 1.8 s at sf0.1.  n_iter=0 keeps the single-pass plan
+    # unpersisted.
     vd = vectors.select(
         F.col(id_col).alias("id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
@@ -204,56 +248,5 @@ def kmeans_assign(
     )
     if n_iter > 0:
         vd = tracked_persist(vd)
-    nulls = F.array(*[F.lit(None).cast("double")] * dims)
-    for _ in range(n_iter):
-        assigned = _assign(vd, ctr, dims)
-        means = assigned.groupBy("cell").agg(
-            *[
-                F.expr(
-                    f"round(avg(_vv[{d}]), {int(round_digits)})"
-                ).alias(f"_m{d}")
-                for d in range(dims)
-            ]
-        )
-        # pack the round's means into a one-row cell -> vector map ...
-        # NULL-cell rows (NULL / wrong-length / NaN-bearing vectors —
-        # the kernel assigns them no cell) must be dropped BEFORE the
-        # pack: map_from_entries rejects a NULL key outright
-        # (NULL_MAP_KEY), where the retired centers-LEFT-JOIN-means
-        # carry simply never matched that group (r10 ADVICE, medium).
-        # Filtering here restores exactly the left-join semantics.
-        mm = means.filter(F.col("cell").isNotNull()).agg(
-            F.map_from_entries(
-                F.collect_list(
-                    F.struct(
-                        F.col("cell"),
-                        F.array(*[F.col(f"_m{d}") for d in range(dims)]),
-                    )
-                )
-            ).alias("_mm")
-        )
-        # ... and carry empty cells (and NULL mean dimensions) from the
-        # previous flat array, element-wise — the old per-dimension
-        # coalesce(_m{d}, cv[{d}]) rule, now row-local on one row.
-        # The PREVIOUS centers are the broadcast side on purpose: this
-        # round's assignment pass already broadcasts the identical
-        # subtree, so ReuseExchange dedupes the two and the previous
-        # round's cascade is evaluated ONCE (with ctr as the stream
-        # side it was re-evaluated per consumer — one extra full
-        # assignment pass per round, visible as a fourth
-        # ArrowEvalPython in the n_iter=2 plan).
-        ctr = mm.crossJoin(F.broadcast(ctr)).select(
-            F.flatten(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(k - 1)),
-                    lambda i: F.zip_with(
-                        F.coalesce(F.col("_mm")[i], nulls),
-                        F.slice("_ctr", i * dims + 1, dims),
-                        lambda m, p: F.coalesce(m, p),
-                    ),
-                )
-            ).alias("_ctr")
-        )
-    return _assign(vd, ctr, dims).select(
-        F.col("id").alias(id_col), "cell"
-    )
+    C = _lloyd_rounds(vd, C, n_iter, int(round_digits))
+    return _assign(vd, C).select(F.col("id").alias(id_col), "cell")

@@ -1,8 +1,9 @@
 """SF1 A/B for the k-means ASSIGNMENT-PASS design (r10 VERDICT item 2).
 
 Round 10 kept the Arrow argmin kernel, whose one-row broadcast
-crossJoin ships the flat k x dims center array ACROSS THE PYTHON
-BOUNDARY ONCE PER ROW (~32 KB/row at match_line_cluster's k~1100) —
+crossJoin then shipped the flat k x dims center array ACROSS THE PYTHON
+BOUNDARY ONCE PER ROW (~32 KB/row at match_line_cluster's k~1100; the
+kernel now holds the centers in its closure instead) —
 measured a dead heat at sf0.1 against the fully-native
 k-row-crossJoin + min(struct(d2, cell)) form, which moves no per-row
 centers but materializes N x k join rows into a hash aggregate.  The
@@ -149,7 +150,7 @@ def main() -> None:
         ctr = spark.createDataFrame(
             [([float(x) for c in seeds for x in c],)], "_ctr array<double>"
         )
-        kernel_df = _assign(vd, ctr, dims).select("id", "cell")
+        kernel_df = _assign(vd, seeds).select("id", "cell")
         native_df = native_assign(vd, ctr, dims, k)
         a = {r.id: r.cell for r in kernel_df.collect()}
         b = {r.id: r.cell for r in native_df.collect()}

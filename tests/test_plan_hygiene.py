@@ -49,7 +49,7 @@ _ARROW_OK = {
     "dorling_cartogram",  # driver-relaxation placements
     "dorling_stats",
     # round-10 optimization: kmeans_assign's argmin is the Arrow
-    # kernel now (vector/kmeans.py _argmin_cell_arrow, the _dot_arrow
+    # kernel now (vector/kmeans.py _assign, the _dot_arrow
     # recipe — bit-identical to the retired Catalyst fold, minus the
     # |rows| x k x dims interpreted lambda dispatch), so every
     # kmeans_assign consumer plans ArrowEvalPython

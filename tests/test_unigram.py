@@ -322,3 +322,35 @@ def test_em_seed_inventory_cap_fails_loudly(spark, monkeypatch):
     monkeypatch.setattr(U, "SEED_INV_ROW_CAP", 3)
     with pytest.raises(Exception, match="SEED_INV_ROW_CAP"):
         U.unigram_train_em(docs, n_rounds=1, max_pieces=8).collect()
+
+
+def test_em_seed_inventory_cap_refuses_before_the_pack(spark, monkeypatch):
+    """The seed-inventory cap is checked BEFORE collect_list packs the
+    inventory into one row: building the trainer's frame raises with
+    no action on it, an inventory of exactly the cap passes, and one
+    piece more is refused."""
+    import pytest
+
+    from gpd_lite_toolbox_spark.text import unigram as U
+
+    docs = spark.createDataFrame(
+        [(1, "line part window line"), (2, "window part line")],
+        "id bigint, text string",
+    )
+    monkeypatch.setattr(U, "SEED_INV_ROW_CAP", 2)
+    with pytest.raises(ValueError, match="SEED_INV_ROW_CAP=2"):
+        U.unigram_train_em(docs, n_rounds=1, max_pieces=8)
+    # the seed inventory of this corpus: every single character plus
+    # the multi-char substrings seen at least min_count=2 times
+    words = ["line", "part", "window", "line", "window", "part", "line"]
+    subs: dict = {}
+    for w in words:
+        for j in range(len(w)):
+            for n in range(1, min(U.MAX_PIECE_LEN, len(w) - j) + 1):
+                subs[w[j:j + n]] = subs.get(w[j:j + n], 0) + 1
+    size = sum(1 for p, c in subs.items() if len(p) == 1 or c >= 2)
+    monkeypatch.setattr(U, "SEED_INV_ROW_CAP", size)
+    assert len(U.unigram_train_em(docs, n_rounds=1, max_pieces=8).collect())
+    monkeypatch.setattr(U, "SEED_INV_ROW_CAP", size - 1)
+    with pytest.raises(ValueError, match="SEED_INV_ROW_CAP"):
+        U.unigram_train_em(docs, n_rounds=1, max_pieces=8)
