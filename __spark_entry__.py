@@ -3717,12 +3717,17 @@ def _q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_banned_phrase_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blocklist scan by dictionary join (text/analysis.py
-    banned_phrase_hits): stride-1 slices per distinct phrase length
-    equi-joined against the phrase dictionary — the scalable shape
-    for 100k-entry NSFW/spam lists where a regex alternation is
-    driver-poison. Oracle = the naive per-(doc, phrase, position)
-    test, a fully independent derivation."""
+    """Blocklist scan (text/analysis.py banned_phrase_hits): an
+    Aho-Corasick automaton — built driver-side from the dictionary,
+    broadcast once — walks each document's characters exactly ONCE in
+    an Arrow-batched mapInPandas pass, reporting every overlapping
+    occurrence of every phrase via merged output links; one corpus
+    scan regardless of how many phrases or distinct lengths the
+    dictionary carries. Declared under two names,
+    ``banned_phrase_hits`` and ``banned_phrase_hits_ac`` (the latter
+    from when a second, dictionary-join tier existed), both with the
+    same rows. Oracle = the naive per-(doc, phrase, position) test, a
+    fully independent derivation."""
     from gpd_lite_toolbox_spark.text.analysis import (
         BANNED_FIXTURE_PHRASES,
         banned_phrase_hits,
@@ -3733,32 +3738,11 @@ def _q_banned_phrase_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_banned_phrase_hits_ac(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SINGLE-PASS tier of the blocklist scan (text/analysis.py
-    banned_phrase_hits mode="ac"): an Aho-Corasick automaton — built
-    driver-side from the dictionary, broadcast once — walks each
-    document's characters exactly ONCE in an Arrow-batched mapInPandas
-    pass, reporting every overlapping occurrence of every phrase
-    via merged output links. One corpus scan regardless of how many
-    phrases or distinct lengths the dictionary carries, vs the join
-    tier's O(chars x distinct_lengths) slice projections — this is the
-    100k-entry-blocklist path (r9 VERDICT item 3). Same dictionary,
-    same oracle, same hashes as banned_phrase_hits."""
-    from gpd_lite_toolbox_spark.text.analysis import (
-        BANNED_FIXTURE_PHRASES,
-        banned_phrase_hits,
-    )
-
-    return banned_phrase_hits(
-        _corpus(spark, sf_dir), BANNED_FIXTURE_PHRASES, mode="ac"
-    )
-
-
 def _q_stream_banned_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming blocklist gate (streaming/grid_stream.py
     run_streaming_blocklist_gate): stateless append-mode ROW-LOCAL
     occurrence fold — a deliberately different derivation than the
-    batch slice-join operator, sharing its naive per-position
+    batch Aho-Corasick operator, sharing its naive per-position
     oracle."""
     from gpd_lite_toolbox_spark.streaming.grid_stream import (
         run_streaming_blocklist_gate,
@@ -3778,7 +3762,7 @@ def _q_stream_banned_phrases_ac(
 ) -> DataFrame:
     """LARGE-DICTIONARY streaming blocklist gate
     (streaming/grid_stream.py run_streaming_blocklist_gate_ac): each
-    micro-batch runs the batch Aho-Corasick tier via foreachBatch —
+    micro-batch runs the batch Aho-Corasick scan via foreachBatch —
     the scale path when the list is too big to inline into the stream
     projection; the per-phrase-struct fold (stream_banned_phrases)
     stays the bounded-list form. Union over micro-batches == the
@@ -4029,7 +4013,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "trigram_logprob": _q_trigram_logprob,
         "kn_trigram_logprob": _q_kn_trigram_logprob,
         "banned_phrase_hits": _q_banned_phrase_hits,
-        "banned_phrase_hits_ac": _q_banned_phrase_hits_ac,
+        "banned_phrase_hits_ac": _q_banned_phrase_hits,
         "stream_banned_phrases": _q_stream_banned_phrases,
         "stream_banned_phrases_ac": _q_stream_banned_phrases_ac,
         "perplexity_buckets_trigram": _q_perplexity_buckets_trigram,

@@ -18,8 +18,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from gpd_lite_toolbox_spark.session import (  # noqa: E402
+    get_spark,
     host_cpus,
-    host_driver_memory,
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -254,8 +254,8 @@ BENCH_QUERIES = [
     # composition over the trigram stack. stream_banned_phrases and
     # stream_banned_phrases_ac NOT benched (both drain eagerly at
     # construction, the stream_curation_ledger class);
-    # banned_phrase_hits / banned_phrase_hits_ac time the two batch
-    # substrates.
+    # banned_phrase_hits / banned_phrase_hits_ac time the batch
+    # Aho-Corasick scan they both declare.
     "dup_groups_star",
     "banned_phrase_hits",
     "banned_phrase_hits_ac",
@@ -315,22 +315,7 @@ def _round_board_path(
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("gpd_lite_toolbox_spark_bench")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_DRIVER_MEM", host_driver_memory()),
-        )
-        .getOrCreate()
-    )
+    spark = get_spark("gpd_lite_toolbox_spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as E
@@ -340,9 +325,6 @@ def main() -> None:
     #-mode startup cost to whichever query happens to run first (a
     # long-lived cluster amortizes this to zero).
     from pyspark.sql import functions as F
-    from gpd_lite_toolbox_spark.deploy import ship_package
-
-    ship_package(spark)
 
     @F.pandas_udf("double")
     def _warm(v):

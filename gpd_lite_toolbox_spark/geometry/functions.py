@@ -47,21 +47,6 @@ def st_rect(x0: pd.Series, y0: pd.Series, x1: pd.Series, y1: pd.Series) -> pd.Se
 
 # -------------------------------------------------------------- accessors
 @F.pandas_udf(T.DoubleType())
-def st_x(geom: pd.Series) -> pd.Series:
-    return pd.Series([float(W.decode(g)[1][0]) for g in geom])
-
-
-@F.pandas_udf(T.DoubleType())
-def st_y(geom: pd.Series) -> pd.Series:
-    return pd.Series([float(W.decode(g)[1][1]) for g in geom])
-
-
-@F.pandas_udf(T.StringType())
-def st_geom_type(geom: pd.Series) -> pd.Series:
-    return pd.Series([W.geom_type(g) for g in geom])
-
-
-@F.pandas_udf(T.DoubleType())
 def st_area(geom: pd.Series) -> pd.Series:
     return pd.Series([K.geom_area(W.decode(g)) for g in geom])
 
@@ -75,14 +60,6 @@ def st_length(geom: pd.Series) -> pd.Series:
 def st_centroid_xy(geom: pd.Series) -> pd.DataFrame:
     pts = [K.geom_centroid(W.decode(g)) for g in geom]
     return pd.DataFrame(pts, columns=["x", "y"])
-
-
-@F.pandas_udf(T.BinaryType())
-def st_centroid(geom: pd.Series) -> pd.Series:
-    pts = np.array([K.geom_centroid(W.decode(g)) for g in geom])
-    if len(pts) == 0:
-        return pd.Series([], dtype=object)
-    return pd.Series(W.points_wkb(pts[:, 0], pts[:, 1]))
 
 
 @F.pandas_udf(BBOX_SCHEMA)

@@ -218,12 +218,6 @@ def points_in_geom(px: np.ndarray, py: np.ndarray, geom) -> np.ndarray:
 
 
 # --------------------------------------------------------------- distances
-def pairwise_min_dist(a: np.ndarray, b: np.ndarray) -> float:
-    """min over vertex pairs of euclidean distance (used in NN kernels)."""
-    d = a[:, None, :] - b[None, :, :]
-    return float(np.sqrt((d * d).sum(axis=2)).min())
-
-
 def max_pairwise_dist(a: np.ndarray, b: np.ndarray) -> float:
     """Exact variant of the reference's line distance
     (``utils.py:77-80`` fh2_dist_lines2): max euclidean distance over the

@@ -137,15 +137,3 @@ def decode(wkb: bytes):
     """Decode one WKB blob -> (type_name, payload). See module docstring."""
     (res, _off) = _decode(memoryview(wkb), 0)
     return res
-
-
-def geom_type(wkb: bytes) -> str:
-    (gtype,) = struct.unpack_from("<I", wkb, 1)
-    return {
-        WKB_POINT: "Point",
-        WKB_LINESTRING: "LineString",
-        WKB_POLYGON: "Polygon",
-        WKB_MULTIPOINT: "MultiPoint",
-        WKB_MULTILINESTRING: "MultiLineString",
-        WKB_MULTIPOLYGON: "MultiPolygon",
-    }[gtype]

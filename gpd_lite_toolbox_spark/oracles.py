@@ -6325,8 +6325,8 @@ FROM tok2 t JOIN sym s USING (token)
 """
 
 
-# Blocklist scan (text/analysis.py banned_phrase_hits): dictionary
-# join over stride-1 slices on the Spark side; the oracle is the
+# Blocklist scan (text/analysis.py banned_phrase_hits): an
+# Aho-Corasick scan on the Spark side; the oracle is the
 # NAIVE independent derivation — every (doc, phrase, position)
 # triple tested directly. Overlapping occurrences count.
 from .text.analysis import BANNED_FIXTURE_PHRASES as _BPH  # noqa: E402

@@ -21,8 +21,8 @@ def host_cpus() -> int:
 
 
 def host_driver_memory() -> str:
-    """Default driver heap for the bench harnesses: half of MemTotal,
-    between 1g and 16g."""
+    """Default driver heap (``get_spark``): half of MemTotal, between
+    1g and 16g."""
     with open("/proc/meminfo") as f:
         kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal"))
     return f"{max(1, min(16, kb // (2 * 1024 * 1024)))}g"
@@ -43,7 +43,10 @@ def get_spark(app_name: str = "gpd_lite_toolbox_spark") -> SparkSession:
         # the driver's events.parquet carries TIMESTAMP(NANOS); read the
         # raw int64 and convert in the view layer (fixtures.py)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", host_driver_memory()),
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -953,12 +953,13 @@ def run_streaming_blocklist_gate(
     store, deterministic under any micro-batch partitioning.
 
     Deliberately a DIFFERENT derivation than the batch operator
-    (text/analysis.py ``banned_phrase_hits`` slices the corpus and
-    equi-joins the phrase dictionary — the right shape for 100k-entry
-    lists; the row-local fold here inlines the phrase list into the
-    projection, the right shape for the bounded lists a live ingest
-    gate carries): both must land on identical rows, so they share
-    the naive per-position DuckDB oracle AND a stream==batch pytest.
+    (text/analysis.py ``banned_phrase_hits`` walks each document once
+    with a broadcast Aho-Corasick automaton — the right shape for
+    100k-entry lists; the row-local fold here inlines the phrase list
+    into the projection, the right shape for the bounded lists a live
+    ingest gate carries): both must land on identical rows, so they
+    share the naive per-position DuckDB oracle AND a stream==batch
+    pytest.
 
     Output: ``(id, phrase, n_hits)`` with n_hits > 0.
     """
@@ -1047,8 +1048,8 @@ def run_streaming_blocklist_gate_ac(
     max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """LARGE-DICTIONARY streaming blocklist gate: each micro-batch
-    runs the batch Aho-Corasick tier (text/analysis.py
-    ``banned_phrase_hits`` mode="ac") via ``foreachBatch`` — the scale
+    runs the batch Aho-Corasick scan (text/analysis.py
+    ``banned_phrase_hits``) via ``foreachBatch`` — the scale
     path when the list is too big to inline.
     ``run_streaming_blocklist_gate`` embeds one struct per phrase in
     the stream projection (the right shape for the bounded lists a
@@ -1059,8 +1060,8 @@ def run_streaming_blocklist_gate_ac(
     so the union over micro-batches is EXACTLY the batch AC output —
     same ``(id, phrase, n_hits)`` contract and the same raw-documents
     oracle as ``stream_banned_phrases`` (stream==batch pytest-pinned;
-    the automaton is rebuilt per micro-batch, an O(dictionary chars)
-    driver step of the codebook-collect class).
+    the automaton is built and broadcast once per stream, an
+    O(dictionary chars) driver step of the codebook-collect class).
 
     ``max_files_per_trigger`` bounds each micro-batch so a multi-file
     source genuinely exercises multiple batches.

@@ -40,7 +40,6 @@ sys.path.insert(0, REPO)
 
 SF01 = "/root/testdata/sf0.1"
 SF1 = os.path.join(REPO, "benchdata", "sf1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def native_assign(vectors_d, ctr_one_row, dims: int, k: int):
@@ -77,31 +76,16 @@ def native_assign(vectors_d, ctr_one_row, dims: int, k: int):
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("ab_kmeans_assign_sf1")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g")
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
     from gpd_lite_toolbox_spark import fixtures as FX
-    from gpd_lite_toolbox_spark.deploy import ship_package
     from gpd_lite_toolbox_spark.operators.lines import line_params
+    from gpd_lite_toolbox_spark.session import get_spark
     from gpd_lite_toolbox_spark.vector.kmeans import _assign
     from gpd_lite_toolbox_spark.vector.pq import default_coarse_centroids
 
-    ship_package(spark)
+    spark = get_spark("ab_kmeans_assign_sf1")
+    spark.sparkContext.setLogLevel("ERROR")
     if not os.path.exists(os.path.join(SF1, "_GENERATED_V3")):
         raise SystemExit("run bench_sf1.py once first to generate sf1 data")
 
@@ -144,7 +128,7 @@ def main() -> None:
         "emb_sf1": (emb_vd, emb_seeds),
         "mlc_sf1": (pooled, mlc_seeds),
     }
-    out: dict = {"cpus": int(CPUS), "passes": {}}
+    out: dict = {"cpus": spark.sparkContext.defaultParallelism, "passes": {}}
     for name, (vd, seeds) in cases.items():
         dims, k = len(seeds[0]), len(seeds)
         ctr = spark.createDataFrame(

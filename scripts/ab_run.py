@@ -24,34 +24,22 @@ def main() -> None:
     os.chdir(tree)
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab_run")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        .getOrCreate()
-    )
+    from gpd_lite_toolbox_spark.session import get_spark
+
+    spark = get_spark("ab_run")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     import __spark_entry__ as E
-    from gpd_lite_toolbox_spark.deploy import ship_package
-
-    ship_package(spark)
 
     @F.pandas_udf("double")
     def _warm(v):
         return v
 
-    spark.range(0, int(cpus) * 4, 1, int(cpus)).select(
+    spark.range(0, cpus * 4, 1, cpus).select(
         _warm(F.col("id").cast("double"))
     ).write.mode("overwrite").format("noop").save()
 

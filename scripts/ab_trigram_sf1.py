@@ -29,30 +29,13 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF1 = os.path.join(REPO, "benchdata", "sf1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 QUERIES = ["trigram_logprob", "kn_trigram_logprob"]
 
 
 def main() -> None:
     label, tree = sys.argv[1], os.path.abspath(sys.argv[2])
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("ab_trigram_sf1")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g")
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
     if not os.path.exists(os.path.join(SF1, "_GENERATED_V3")):
         raise SystemExit("run bench_sf1.py once first to generate sf1 data")
 
@@ -60,15 +43,17 @@ def main() -> None:
     import __spark_entry__ as E
 
     assert E.__file__.startswith(tree + os.sep)
-    from gpd_lite_toolbox_spark.deploy import ship_package
+    from gpd_lite_toolbox_spark.session import get_spark
 
-    ship_package(spark)
+    spark = get_spark("ab_trigram_sf1")
+    spark.sparkContext.setLogLevel("ERROR")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     qs = E.queries()
 
     out: dict = {
         "label": label,
         "tree": tree,
-        "cpus": int(CPUS),
+        "cpus": spark.sparkContext.defaultParallelism,
         "broadcast": "disabled",
         "runs": {},
     }

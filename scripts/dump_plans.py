@@ -20,28 +20,15 @@ def main() -> None:
     os.chdir(tree)
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from pyspark.sql import SparkSession
+    from gpd_lite_toolbox_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("dump_plans")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        .getOrCreate()
-    )
+    spark = get_spark("dump_plans")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as E
-    from gpd_lite_toolbox_spark.deploy import ship_package
 
-    ship_package(spark)
-    out_dir = os.path.join("/root/repo", "plans", tag)
+    out_dir = os.path.join(tree, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     qs = E.queries()
     for name in names:

@@ -40,7 +40,6 @@ import time
 
 N_DOCS = 100_000
 HOT_FRAC = 2  # 1 in 2 docs carries the boilerplate tail
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 BOILER = " all rights reserved"  # 20 chars -> a couple of fingerprints
 
@@ -64,37 +63,24 @@ def corpus(spark):
 
 def main() -> None:
     trees = [os.path.abspath(p) for p in sys.argv[1:3]]
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("skew_winnow_fixture")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g")
-        )
-        .getOrCreate()
-    )
+    sys.path.insert(0, trees[0])
+    from gpd_lite_toolbox_spark.session import get_spark
+
+    spark = get_spark("skew_winnow_fixture")
     spark.sparkContext.setLogLevel("ERROR")
     docs = corpus(spark).localCheckpoint()
 
     # ---- posting-mass layout (tree-independent: fingerprints are
     # identical in both trees) --------------------------------------
-    sys.path.insert(0, trees[0])
-    from gpd_lite_toolbox_spark.deploy import ship_package
-
-    ship_package(spark)
     import gpd_lite_toolbox_spark.text.dedup as D0
 
     fps = D0.winnow_fingerprints(docs).localCheckpoint()
     n_postings = fps.count()
     n_distinct = fps.select("fp").distinct().count()
     layout = (
-        fps.repartition(int(CPUS), "fp")
+        fps.repartition(spark.sparkContext.defaultParallelism, "fp")
         .withColumn("p", F.spark_partition_id())
         .groupBy("p")
         .count()

@@ -93,6 +93,37 @@ def test_release_caches_frees_tracked_intermediates(spark):
     assert release_caches() == 0  # registry drained; idempotent
 
 
+def test_contamination_report_persists_corpus_only_without_pairs(spark):
+    """Without ``pairs`` the corpus feeds both the coverage pass and
+    the LSH pair pipeline, so contamination_report persists it next to
+    the splits projection and the leak-pair table; with a precomputed
+    ``pairs`` frame the corpus is read once and is not persisted. Both
+    calls return the same rows."""
+    from gpd_lite_toolbox_spark import release_caches
+    from gpd_lite_toolbox_spark.text.dedup import (
+        contamination_report,
+        minhash_lsh_pairs,
+    )
+
+    corpus = _corpus_body(spark).withColumnRenamed("body", "text")
+    splits = spark.createDataFrame(
+        [(1, "train"), (2, "test"), (3, "train")], "id bigint, split string"
+    )
+    release_caches()  # drain anything earlier tests tracked
+    pairs = minhash_lsh_pairs(corpus, threshold=0.3)
+    n_lsh = release_caches()
+    with_pairs = contamination_report(
+        corpus, splits, threshold=0.3, pairs=pairs
+    ).collect()
+    n_with_pairs = release_caches()
+    without = contamination_report(corpus, splits, threshold=0.3).collect()
+    n_without = release_caches()
+    assert n_with_pairs == 2  # splits projection + leak-pair table
+    assert n_without == n_lsh + 3  # ... + the corpus projection
+    assert sorted(with_pairs) == sorted(without)
+    assert {r.id for r in without if r.leaked} == {1, 2}
+
+
 def test_write_warc_rejects_uri_paths(spark):
     from gpd_lite_toolbox_spark.sources.warc import write_warc
 

@@ -1,8 +1,8 @@
 """Round-10 pins (r9 VERDICT + ADVICE items).
 
-- banned_phrase_hits grows a single-pass Aho-Corasick mapInPandas tier
-  for large dictionaries (VERDICT next-round item 2) and drops the
-  unconditional broadcast hint on the join tier (ADVICE item 2).
+- banned_phrase_hits scans with a single-pass Aho-Corasick mapInPandas
+  pass (VERDICT next-round item 2), pinned against a naive per-position
+  count.
 - winnow_report exposes the MOSS df-cap drop mass (VERDICT item 3).
 - contamination_report joins dup-ngram coverage with split leakage
   into one per-doc curation artifact (VERDICT item 8a).
@@ -43,18 +43,31 @@ def _rows(df):
 # --- Aho-Corasick tier ---
 
 
-def test_ac_tier_equals_join_tier_on_fixture(spark, sf_dir):
+def _naive_rows(docs, phrases):
+    """(id, phrase, n_hits) by the naive per-position count over the
+    collected, case-folded documents — the reference the AC scan must
+    reproduce."""
+    out = []
+    for doc_id, text in docs.select("id", "text").collect():
+        if text is not None:
+            out += [
+                (doc_id, p, n)
+                for p, n in _naive_overlap_counts(text.lower(), phrases).items()
+            ]
+    return sorted(out)
+
+
+def test_ac_tier_equals_naive_scan_on_fixture(spark, sf_dir):
     corpus = FX.fixture_df(spark, sf_dir, "corpus")
-    a = banned_phrase_hits(corpus, BANNED_FIXTURE_PHRASES, mode="join")
-    b = banned_phrase_hits(corpus, BANNED_FIXTURE_PHRASES, mode="ac")
-    assert _rows(a) == _rows(b)
-    assert a.columns == b.columns
+    b = banned_phrase_hits(corpus, BANNED_FIXTURE_PHRASES)
+    assert _rows(b) == _naive_rows(corpus, list(BANNED_FIXTURE_PHRASES))
+    assert b.columns == ["id", "phrase", "n_hits"]
 
 
 def test_ac_tier_overlaps_case_null_empty(spark):
     """Overlapping occurrences ('aaaa' holds 'aa' 3 times), nested
     phrases sharing prefixes ('ab' inside 'aba'), case folding, and
-    null/empty docs — all must agree with the join tier exactly."""
+    null/empty docs — all must agree with the naive scan exactly."""
     docs = spark.createDataFrame(
         [
             (1, "aaaa"),
@@ -67,8 +80,8 @@ def test_ac_tier_overlaps_case_null_empty(spark):
         "id long, text string",
     )
     phrases = ["aa", "ab", "aba", "abab", "zz"]
-    a = _rows(banned_phrase_hits(docs, phrases, mode="join"))
-    b = _rows(banned_phrase_hits(docs, phrases, mode="ac"))
+    a = _naive_rows(docs, phrases)
+    b = _rows(banned_phrase_hits(docs, phrases))
     assert a == b
     # spot truth: AC output links must surface the suffix phrase too
     d2 = {(p, n) for i, p, n in b if i == 2}
@@ -80,51 +93,9 @@ def test_ac_tier_case_sensitive_mode(spark):
         [(1, "Foo foo FOO")], "id long, text string"
     )
     got = _rows(
-        banned_phrase_hits(
-            docs, ["foo"], case_insensitive=False, mode="ac"
-        )
+        banned_phrase_hits(docs, ["foo"], case_insensitive=False)
     )
     assert got == [(1, "foo", 1)]
-
-
-def test_auto_mode_dispatch(spark):
-    """auto picks AC at >= _AC_MIN_PHRASES entries (or length spread)
-    and the join tier below; the tier shows in the physical plan as
-    MapInPandas vs none."""
-    docs = spark.createDataFrame([(1, "abc")], "id long, text string")
-    few = banned_phrase_hits(docs, ["ab", "bc"], mode="auto")
-    assert "MapInPandas" not in few._jdf.queryExecution().executedPlan().toString()
-    many = banned_phrase_hits(
-        docs,
-        [f"phrase{i:04d}" for i in range(TA._AC_MIN_PHRASES)],
-        mode="auto",
-    )
-    assert "MapInPandas" in many._jdf.queryExecution().executedPlan().toString()
-    # length-spectrum trigger: few phrases, many distinct lengths
-    spread = banned_phrase_hits(
-        docs,
-        ["a" * (i + 1) for i in range(TA._AC_MIN_LENGTHS)],
-        mode="auto",
-    )
-    assert "MapInPandas" in spread._jdf.queryExecution().executedPlan().toString()
-
-
-def test_join_tier_broadcast_hint_gated(spark, monkeypatch):
-    """ADVICE item 2: the explicit broadcast hint must disappear when
-    the dictionary outgrows _BROADCAST_MAX_PHRASES, so AQE (not a
-    forced hint) decides the join strategy for huge blocklists."""
-    docs = spark.createDataFrame([(1, "abcd")], "id long, text string")
-    monkeypatch.setattr(TA, "_BROADCAST_MAX_PHRASES", 2)
-    hinted = banned_phrase_hits(docs, ["ab", "cd"], mode="join")
-    assert "ResolvedHint" in hinted._jdf.queryExecution().analyzed().toString()
-    unhinted = banned_phrase_hits(docs, ["ab", "cd", "bc"], mode="join")
-    assert (
-        "ResolvedHint"
-        not in unhinted._jdf.queryExecution().analyzed().toString()
-    )
-    # and the two tiers still agree
-    assert _rows(hinted) == [(1, "ab", 1), (1, "cd", 1)]
-    assert _rows(unhinted) == [(1, "ab", 1), (1, "bc", 1), (1, "cd", 1)]
 
 
 def test_ac_automaton_unit():
@@ -753,9 +724,7 @@ def test_stream_blocklist_ac_equals_batch_and_inline_stream(
     inline_stream = _rows(run_streaming_blocklist_gate(spark, src, phrases))
     batch = _rows(
         banned_phrase_hits(
-            docs.select(F.col("doc_id").alias("id"), "text"),
-            phrases,
-            mode="ac",
+            docs.select(F.col("doc_id").alias("id"), "text"), phrases
         )
     )
     assert ac_stream == inline_stream == batch
@@ -861,7 +830,7 @@ def test_ac_tier_plan_shape(spark, sf_dir):
     Python node (the automaton rides a broadcast variable, not the
     plan); the only exchange is the post-scan hit aggregate."""
     corpus = FX.fixture_df(spark, sf_dir, "corpus")
-    df = banned_phrase_hits(corpus, BANNED_FIXTURE_PHRASES, mode="ac")
+    df = banned_phrase_hits(corpus, BANNED_FIXTURE_PHRASES)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
     below = plan.split("MapInPandas", 1)[1]

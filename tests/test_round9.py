@@ -498,7 +498,7 @@ def test_cc_star_random_graphs_match_union_find(spark):
         }, f"trial {trial} (n={n}, m={len(edges)})"
 
 
-# --- dictionary-join blocklist scan ---
+# --- blocklist scan ---
 
 from gpd_lite_toolbox_spark.text.analysis import (  # noqa: E402
     banned_phrase_hits,
@@ -545,7 +545,7 @@ def test_banned_phrase_hits_dataframe_input_and_guard(spark):
 
 
 def test_stream_blocklist_equals_batch(spark, sf_dir, tmp_path):
-    """The streaming row-local fold and the batch slice-join are
+    """The streaming row-local fold and the batch Aho-Corasick scan are
     different derivations of one contract — identical rows."""
     import gpd_lite_toolbox_spark.fixtures as _FX
     from gpd_lite_toolbox_spark.streaming.grid_stream import (
